@@ -26,7 +26,7 @@ from ton_etl_spark.cdc.schema import (
 )
 from ton_etl_spark.functions.tokens import with_token_validation
 from ton_etl_spark.lake.table import LakeTable
-from ton_etl_spark.lake.merge import merge_lww, reduce_batch_lww
+from ton_etl_spark.lake.merge import merge_lww
 
 
 def final_state_oracle(events: DataFrame) -> DataFrame:

@@ -25,8 +25,8 @@ JDBC read, a test fixture — no live database required):
   enforces (``lake/table.py _merge_schemas``).
 
 Everything is driver-side metadata work on O(columns) rows; no data moves
-except the empty-DataFrame commit that publishes an evolved schema, so the
-sync is as cheap at 100 TB as at 100 KB.
+— an evolved schema is published by a metadata-only commit that runs no
+Spark job — so the sync is as cheap at 100 TB as at 100 KB.
 """
 
 from __future__ import annotations
@@ -210,9 +210,9 @@ def sync_table_from_catalog(
     "missing_in_catalog": [...]}``.
 
     - absent table  -> created with the derived schema.
-    - catalog grew  -> one metadata-only commit (empty-DataFrame append
-      through the normal CAS/rebase path) publishes the additively merged
-      schema; existing files are untouched and read back null-filled.
+    - catalog grew  -> one metadata-only commit (``commit_metadata``, no
+      Spark job) publishes the additively merged schema; existing files
+      are untouched and read back null-filled.
     - catalog shrank-> warning only; the lake keeps history the source
       dropped (additive-only, same as ``_merge_schemas``).
     - type change   -> ValueError before anything is written — unless the
@@ -255,6 +255,6 @@ def sync_table_from_catalog(
     if commit_key is None:
         cols_sig = json.dumps([(f.name, f.dataType.simpleString()) for f in merged.fields])
         commit_key = "catalog-sync-" + hashlib.md5(cols_sig.encode()).hexdigest()[:16]
-    t.append(spark.createDataFrame([], merged), commit_key=commit_key)
+    t.commit_metadata(commit_key, schema=merged)
     return t, {"action": "evolved", "added": added, "missing_in_catalog": removed,
                "widened": widened}

@@ -174,7 +174,7 @@ def refresh_agg_mart(
         buckets = [r["__b"] for r in delta.select(bexpr.alias("__b")).distinct().collect()]
         if not buckets:
             # nothing changed (or a pure compaction): still record the interval
-            mart.append(mart.spark.createDataFrame([], msnap.schema), commit_key=commit_key)
+            mart.commit_metadata(commit_key)
             return {"applied": True, "from": from_version, "to": to_version, "buckets": []}
 
         old = mart.read(buckets=buckets)

@@ -15,12 +15,13 @@ pure driver-side metadata work plus file deletes.
 from __future__ import annotations
 
 import os
-import uuid
+from typing import NamedTuple
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ton_etl_spark.cdc.schema import LSN_COL, OP_COL
-from ton_etl_spark.lake.table import DATA_DIR, MANIFEST_DIR, LakeTable, Snapshot
+from ton_etl_spark.lake.table import DATA_DIR, MANIFEST_DIR, DataFile, LakeTable, Snapshot
 
 
 def rewrite_buckets(
@@ -123,9 +124,8 @@ def compact_small_files(
         if f.bucket in bset_all:
             by_bucket.setdefault(f.bucket, []).append(f)
     keep_files: dict[int, list] = {}
-    small_paths: list[str] = []
+    packed: list[DataFile] = []
     touched: list[int] = []
-    n_packed = 0
     for b in buckets:
         fs = by_bucket.get(b, [])
         small = [f for f in fs if f.rows < threshold]
@@ -133,18 +133,14 @@ def compact_small_files(
             continue
         touched.append(b)
         keep_files[b] = [f for f in fs if f.rows >= threshold]
-        small_paths += [os.path.join(table.root, f.path) for f in small]
-        n_packed += len(small)
+        packed += small
     if not touched:
         return {"applied": False, "buckets": [], "packed_files": 0}
-    # explicit snapshot schema: old slivers NULL-fill late-added columns,
-    # exactly like read()
-    df = table.spark.read.schema(snap.schema).parquet(*small_paths)
     ok = table.overwrite_buckets(
-        df, touched, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files,
+        table._scan(snap.schema, packed), touched, commit_key=commit_key,
+        schema=snap.schema, base_version=snap.version, keep_files=keep_files,
     )
-    return {"applied": ok, "buckets": touched, "packed_files": n_packed}
+    return {"applied": ok, "buckets": touched, "packed_files": len(packed)}
 
 
 def rolling_maintenance(
@@ -267,7 +263,7 @@ def rebucket(
       ``check_bucket_fn`` keeps passing; the snapshot's per-version
       ``n_buckets`` is what readers and merges consult, so time-travel
       reads of old versions keep pruning with the OLD count).
-    - The swap is a single ``_publish``: concurrently-committed epochs win
+    - The swap is a single CAS publish: concurrently-committed epochs win
       the CAS and this raises ``CommitConflictError`` — a rebucket planned
       against a stale base holds stale rows and MUST be re-derived, never
       rebased (same contract as merge/overwrite, unlike append).  Run it
@@ -286,33 +282,9 @@ def rebucket(
         raise ValueError("new_n_buckets must be positive")
     if new_n_buckets == snap.n_buckets:
         return {"applied": False, "n_buckets": snap.n_buckets}
-    df = table.read(version=snap.version)  # raw rows, tombstones included
-    commit_id = f"c{snap.version + 1}-rb{uuid.uuid4().hex[:8]}"
-    new_files = table._write_commit_files(
-        df, commit_id, new_n_buckets, snap.key_cols,
-        target_file_rows=table._target_file_rows(snap),
-        stats_cols=table._prop_cols(snap, "stats_cols"),
-        sort_cols=table._prop_cols(snap, "sort_cols"),
-    )
-    by_bucket: dict[int, list] = {}
-    for f in new_files:
-        by_bucket.setdefault(f.bucket, []).append(f)
-    manifests = {
-        b: table._write_manifest(b, fs, commit_id) for b, fs in by_bucket.items()
-    }
-    wm, recent = snap.advanced_keys(commit_key)
-    new_snap = Snapshot(
-        version=snap.version + 1,
-        schema_json=snap.schema_json,
-        n_buckets=new_n_buckets,
-        key_cols=snap.key_cols,
-        manifests=manifests,
-        commit_watermarks=wm,
-        recent_commit_keys=recent,
-        properties=snap.properties,
-    )
-    new_snap._root = table.root
-    table._publish(new_snap)  # CommitConflictError => loser re-derives
+    new_files = table._rebucket(snap, new_n_buckets, commit_key)
+    if new_files is None:  # another writer applied commit_key meanwhile
+        return {"applied": False, "n_buckets": table.current().n_buckets}
     return {
         "applied": True,
         "n_buckets": new_n_buckets,
@@ -521,100 +493,24 @@ def delete_where(
     exclude every value.  A NULL or unencodable probe value keeps that
     column unprunable but never breaks exactness (NULL never matches
     ``isin`` — NULL rows are always kept, same as ranges)."""
-    from ton_etl_spark.lake.table import (
-        _encode_probe_lists,
-        _file_may_match,
-        _file_may_match_in,
-        _stats_encode,
-    )
-
-    where = where or {}
-    where_in = where_in or {}
-    if any(lo is None and hi is None for lo, hi in where.values()):
-        raise ValueError(
-            "delete_where needs at least one bounded range; a (None, None) "
-            "range would also delete NULL rows, contradicting the NULL-kept "
-            "contract — use rewrite_buckets(predicate=...) for a full wipe"
-        )
-    if not where and not where_in:
-        raise ValueError(
-            "delete_where needs at least one bounded range or a where_in "
-            "probe list"
-        )
     snap = table.current()
-    if where:
-        from ton_etl_spark.lake.table import _conform_where_bounds
-
-        where = _conform_where_bounds(snap.schema, where)
-    if where_in:
-        from ton_etl_spark.lake.table import _conform_where_in
-
-        # same-typed probes before hashing/encoding/filtering — see
-        # _conform_where_in for why raw values are unsound under ANSI
-        where_in = _conform_where_in(snap.schema, where_in)
-    if any(len(v) == 0 for v in where_in.values()):
-        # an empty (or all-unrepresentable) probe list matches nothing;
-        # the delete is a no-op
+    rw = _plan_rewrite(table, snap, "delete_where", where, where_in,
+                       commit_key, file_granular)
+    if rw is None:
         return {"applied": False, "buckets": [], "deleted_rows": 0}
-    if commit_key is not None and snap.has_commit_key(commit_key):
-        return {"applied": False, "buckets": [], "deleted_rows": 0}
-    enc = {
-        c: (_stats_encode(lo), _stats_encode(hi))
-        for c, (lo, hi) in table._session_tz_bounds(where).items()
-    }
-    enc_in: dict[str, list] = (
-        _encode_probe_lists(table._session_tz_converter(), where_in)
-        if where_in
-        else {}
-    )
-    cand = table._probe_buckets(snap, where_in) if where_in else None
-    buckets = sorted({
-        f.bucket for f in snap.files
-        if (cand is None or f.bucket in cand)
-        and _file_may_match(f, enc) and _file_may_match_in(f, enc_in)
-    })
-    if not buckets:
-        return {"applied": False, "buckets": [], "deleted_rows": 0}
-    matched = F.lit(True)
-    for col, (lo, hi) in where.items():
-        if lo is not None:
-            matched = matched & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            matched = matched & (F.col(col) <= F.lit(hi))
-    for col, vals in where_in.items():
-        matched = matched & F.col(col).isin(list(vals))
-    keep = ~F.coalesce(matched, F.lit(False))  # NULL range col => kept
+    keep = ~rw.matched
     if protect_tombstones and OP_COL in snap.schema.fieldNames():
         keep = keep | F.coalesce(F.col(OP_COL) == "d", F.lit(False))
-    bset = set(buckets)
-    before = sum(f.rows for f in snap.files if f.bucket in bset)
-    keep_files = None
-    if file_granular:
-        keep_files = {b: [] for b in buckets}
-        hit_paths = []
-        for f in snap.files:
-            if f.bucket not in bset:
-                continue
-            if _file_may_match(f, enc) and _file_may_match_in(f, enc_in):
-                hit_paths.append(os.path.join(table.root, f.path))
-            else:
-                keep_files[f.bucket].append(f)
-        src = table.spark.read.schema(snap.schema).parquet(*hit_paths)
-        df = src.where(keep)
-    else:
-        df = table.read(buckets=buckets, version=snap.version).where(keep)
+    before = sum(f.rows for f in snap.files_for(rw.buckets))
     ok = table.overwrite_buckets(
-        df, buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files,
+        rw.src.where(keep), rw.buckets, commit_key=commit_key,
+        schema=snap.schema, base_version=snap.version, keep_files=rw.keep_files,
     )
     # post-commit re-read: exact unless another writer lands in these
     # buckets between our commit and this read (our own commit already
     # conflicts/rebases any interleaved touch of them)
-    after = (
-        sum(f.rows for f in table.current().files if f.bucket in bset)
-        if ok else before
-    )
-    return {"applied": ok, "buckets": buckets, "deleted_rows": before - after}
+    after = sum(f.rows for f in table.current().files_for(rw.buckets)) if ok else before
+    return {"applied": ok, "buckets": rw.buckets, "deleted_rows": before - after}
 
 
 def update_where(
@@ -652,17 +548,6 @@ def update_where(
     Returns ``{"applied", "buckets", "updated_rows"}`` — ``updated_rows``
     is the exact matched count (one extra scan of the touched slice;
     compliance updates want the audited number)."""
-    from ton_etl_spark.lake.table import (
-        _conform_where_bounds,
-        _conform_where_in,
-        _encode_probe_lists,
-        _file_may_match,
-        _file_may_match_in,
-        _stats_encode,
-    )
-
-    where = where or {}
-    where_in = where_in or {}
     if not set_exprs:
         raise ValueError("update_where needs at least one set column")
     snap = table.current()
@@ -676,82 +561,82 @@ def update_where(
             f"cannot set key columns {bad_keys}: the updated row would "
             "hash to a different bucket — that is a delete+insert"
         )
-    if any(lo is None and hi is None for lo, hi in where.values()):
-        raise ValueError(
-            "update_where needs bounded ranges; a (None, None) range would "
-            "also update NULL rows, contradicting the NULL-kept contract"
-        )
-    if not where and not where_in:
-        raise ValueError(
-            "update_where needs at least one bounded range or a where_in "
-            "probe list — for a full-table rewrite use rewrite_buckets"
-        )
-    if where:
-        where = _conform_where_bounds(snap.schema, where)
-    if where_in:
-        where_in = _conform_where_in(snap.schema, where_in)
-    if any(len(v) == 0 for v in where_in.values()):
+    rw = _plan_rewrite(table, snap, "update_where", where, where_in,
+                       commit_key, file_granular)
+    if rw is None:
         return {"applied": False, "buckets": [], "updated_rows": 0}
-    if commit_key is not None and snap.has_commit_key(commit_key):
-        return {"applied": False, "buckets": [], "updated_rows": 0}
-    enc = {
-        c: (_stats_encode(lo), _stats_encode(hi))
-        for c, (lo, hi) in table._session_tz_bounds(where).items()
-    }
-    enc_in: dict[str, list] = (
-        _encode_probe_lists(table._session_tz_converter(), where_in)
-        if where_in
-        else {}
-    )
-    cand = table._probe_buckets(snap, where_in) if where_in else None
-    buckets = sorted({
-        f.bucket for f in snap.files
-        if (cand is None or f.bucket in cand)
-        and _file_may_match(f, enc) and _file_may_match_in(f, enc_in)
-    })
-    if not buckets:
-        return {"applied": False, "buckets": [], "updated_rows": 0}
-    matched = F.lit(True)
-    for col, (lo, hi) in where.items():
-        if lo is not None:
-            matched = matched & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            matched = matched & (F.col(col) <= F.lit(hi))
-    for col, vals in where_in.items():
-        matched = matched & F.col(col).isin(list(vals))
-    matched = F.coalesce(matched, F.lit(False))  # NULL pred col => untouched
-    bset = set(buckets)
-    keep_files = None
-    if file_granular:
-        keep_files = {b: [] for b in buckets}
-        hit_paths = []
-        for f in snap.files:
-            if f.bucket not in bset:
-                continue
-            if _file_may_match(f, enc) and _file_may_match_in(f, enc_in):
-                hit_paths.append(os.path.join(table.root, f.path))
-            else:
-                keep_files[f.bucket].append(f)
-        src = table.spark.read.schema(snap.schema).parquet(*hit_paths)
-    else:
-        src = table.read(buckets=buckets, version=snap.version)
-    updated_rows = src.where(matched).count()
+    updated_rows = rw.src.where(rw.matched).count()
     proj = []
     for f in snap.schema.fields:
         if f.name in set_exprs:
             e = set_exprs[f.name]
             e = F.expr(e) if isinstance(e, str) else e
             proj.append(
-                F.when(matched, e.cast(f.dataType))
+                F.when(rw.matched, e.cast(f.dataType))
                 .otherwise(F.col(f.name)).alias(f.name)
             )
         else:
             proj.append(F.col(f.name))
     ok = table.overwrite_buckets(
-        src.select(*proj), buckets, commit_key=commit_key, schema=snap.schema,
-        base_version=snap.version, keep_files=keep_files,
+        rw.src.select(*proj), rw.buckets, commit_key=commit_key,
+        schema=snap.schema, base_version=snap.version, keep_files=rw.keep_files,
     )
-    return {"applied": ok, "buckets": buckets, "updated_rows": updated_rows}
+    return {"applied": ok, "buckets": rw.buckets, "updated_rows": updated_rows}
+
+
+class _Rewrite(NamedTuple):
+    buckets: list[int]  # buckets the rewrite replaces
+    matched: Column  # exact predicate; NULL predicate columns never match
+    src: DataFrame  # rows to rewrite
+    keep_files: dict[int, list[DataFile]] | None  # carried unchanged
+
+
+def _plan_rewrite(
+    table: LakeTable,
+    snap: Snapshot,
+    verb: str,
+    where: dict | None,
+    where_in: dict | None,
+    commit_key: str | None,
+    file_granular: bool,
+) -> _Rewrite | None:
+    """The one planning step of the predicate-scoped copy-on-write
+    rewrites (``delete_where``, ``update_where``): input guards, then the
+    table's scan planner picks the files the predicate can touch at
+    ``snap``.  The rewrite replaces every bucket holding such a file; its
+    source is those buckets' rows, or with ``file_granular`` only the hit
+    files, the buckets' other files riding along unchanged in
+    ``keep_files``.  None when there is nothing to rewrite (``commit_key``
+    already applied, or no file can match)."""
+    where = where or {}
+    where_in = where_in or {}
+    if any(lo is None and hi is None for lo, hi in where.values()):
+        raise ValueError(
+            f"{verb} needs bounded ranges; a (None, None) range would also "
+            "match NULL rows, contradicting the NULL-kept contract — use "
+            "rewrite_buckets for a full-table rewrite"
+        )
+    if not where and not where_in:
+        raise ValueError(
+            f"{verb} needs at least one bounded range or a where_in probe list"
+        )
+    if commit_key is not None and snap.has_commit_key(commit_key):
+        return None
+    plan = table._plan_scan(snap, where, where_in)
+    buckets = sorted({f.bucket for f in plan.files})
+    if not buckets:
+        return None
+    keep_files = None
+    if file_granular:
+        hit = {f.path for f in plan.files}
+        keep_files = {b: [] for b in buckets}
+        for f in snap.files_for(buckets):
+            if f.path not in hit:
+                keep_files[f.bucket].append(f)
+        src = table._scan(snap.schema, plan.files)
+    else:
+        src = table.read(buckets=buckets, version=snap.version)
+    return _Rewrite(buckets, F.coalesce(plan.residual(), F.lit(False)), src, keep_files)
 
 
 def retention_sweep(

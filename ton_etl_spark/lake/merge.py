@@ -42,20 +42,10 @@ Scale design (the part the reference outsources to Postgres indexes):
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_TIMING = os.environ.get("SPARK_GRAFT_TIMING", "") not in ("", "0")
-
-
-def _tlog(label: str, t0: float) -> None:
-    if _TIMING:
-        print(f"@@timing {label} {time.perf_counter() - t0:.2f}s", file=sys.stdout, flush=True)
 
 from ton_etl_spark.cdc.schema import OP_COL, LSN_COL, TS_COL, op_priority_expr
 from ton_etl_spark.lake.table import LakeTable, bucket_of, _merge_schemas, _conform
@@ -123,8 +113,6 @@ def merge_lww(
     table: LakeTable,
     batch: DataFrame,
     commit_key: str | None = None,
-    pre_reduced: bool = False,  # kept for API compat; the single-agg merge
-    n_salts: int = DEFAULT_SALT,  # handles raw and pre-reduced batches alike
     buckets: list[int] | None = None,
 ) -> dict:
     """MERGE a CDC batch into ``table`` with LWW semantics, in ONE shuffle.
@@ -147,7 +135,7 @@ def merge_lww(
     """
     snap = table.current()
     if commit_key is not None and snap.has_commit_key(commit_key):
-        return {"applied": False, "buckets": [], "rows_written": 0}
+        return {"applied": False, "buckets": []}
     table.check_bucket_fn(snap)
     key_cols = snap.key_cols
 
@@ -160,10 +148,8 @@ def merge_lww(
     # through the validation UDF re-ran the whole Arrow pipeline and nearly
     # doubled epoch cost.)
     if buckets is None:
-        t0 = time.perf_counter()
         bexpr = bucket_of(key_cols, snap.n_buckets)
         buckets = [r["__b"] for r in batch.select(bexpr.alias("__b")).distinct().collect()]
-        _tlog("probe", t0)
 
     current = table.read(buckets=buckets)
 
@@ -203,7 +189,6 @@ def merge_lww(
             .agg(F.max_by(payload, ord_expr).alias("__win"))
             .select("__win.*")
         )
-        t0 = time.perf_counter()
         ok = table.overwrite_buckets(
             winners,
             buckets,
@@ -212,7 +197,6 @@ def merge_lww(
             pre_partitioned=True,
             base_version=snap.version,
         )
-        _tlog("merge_write", t0)
     finally:
         spark.catalog.dropGlobalTempView(view)
     return {"applied": ok, "buckets": sorted(buckets)}

@@ -67,16 +67,18 @@ winner's snapshot.  Readers are lock-free.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
+import operator
 import os
 import re
 import shutil
 import uuid
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass, field, replace
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -392,9 +394,7 @@ def _encode_probe_lists(conv, where_in: dict[str, list]) -> dict[str, list]:
     """Pre-encode ``where_in`` probe lists for ``_file_may_match_in`` —
     the ONE implementation of the sentinel contract (sorted for the bisect;
     ``[]`` marks a column unprunable when any probe value is NULL or
-    unencodable / unorderable), shared by ``LakeTable.read`` and
-    ``maintenance.delete_where``.  The skip test's exactness depends on
-    every call site encoding identically, so this must not be inlined."""
+    unencodable / unorderable), used only by ``LakeTable._plan_scan``."""
     enc_in: dict[str, list] = {}
     for c, vals in where_in.items():
         ev = [_stats_encode(conv(v)) for v in vals]
@@ -429,6 +429,39 @@ def _file_may_match(f: DataFile, enc_where: dict[str, tuple[Any, Any]]) -> bool:
         except TypeError:
             continue
     return True
+
+
+@dataclass
+class ScanPlan:
+    """What a predicate can touch at one snapshot — the output of
+    ``LakeTable._plan_scan``, the one place that decides file skipping for
+    reads, predicate-scoped rewrites and the co-located join."""
+
+    # predicates conformed to their column types (``_conform_where_bounds``
+    # / ``_conform_where_in``)
+    where: dict[str, tuple[Any, Any]]
+    where_in: dict[str, list]
+    # ``where`` with naive datetimes pinned to the session timezone: what
+    # the skip test encodes, and what an Arrow-side filter compares against
+    aware_where: dict[str, tuple[Any, Any]]
+    # candidate buckets (None: every bucket)
+    buckets: list[int] | None
+    # files whose manifest bounds may hold a matching row
+    files: list[DataFile]
+
+    def residual(self) -> Column | None:
+        """The exact row filter (skipping is an optimization, this is the
+        truth); None when there is no predicate.  NULL in a predicate
+        column evaluates to NULL, i.e. never matches."""
+        conds = []
+        for col, (lo, hi) in self.where.items():
+            if lo is not None:
+                conds.append(F.col(col) >= F.lit(lo))
+            if hi is not None:
+                conds.append(F.col(col) <= F.lit(hi))
+        for col, vals in self.where_in.items():
+            conds.append(F.col(col).isin(list(vals)))
+        return functools.reduce(operator.and_, conds) if conds else None
 
 
 @dataclass
@@ -931,24 +964,16 @@ class LakeTable:
     def _widening(snap: Snapshot) -> bool:
         return snap.properties.get("type_widening", "").lower() in ("1", "true")
 
-    def _session_tz_bounds(
-        self, where: dict[str, tuple[Any, Any]]
-    ) -> dict[str, tuple[Any, Any]]:
-        """Naive datetime bounds are session-local (that is how the Spark
-        residual filter interprets them); make that explicit so
-        ``_stats_encode`` canonicalizes them to the UTC the stored bounds
-        use.  Non-datetime values pass through untouched.  Spark accepts
-        offset-style timezone ids ('+09:00', 'GMT+8') that ZoneInfo does
-        not — those are parsed as fixed offsets; anything unrecognizable
-        disables skipping for that bound (``None`` => unbounded => every
-        file kept; the residual filter stays correct)."""
-        conv = self._session_tz_converter()
-        return {c: (conv(lo), conv(hi)) for c, (lo, hi) in where.items()}
-
     def _session_tz_converter(self):
-        """Shared naive-datetime → session-tz-aware converter for skip-side
-        predicate encoding (see ``_session_tz_bounds`` for the contract);
-        returns a callable so in-list probes reuse the same resolution."""
+        """Naive-datetime → session-tz-aware converter for skip-side
+        predicate encoding.  Naive datetime bounds are session-local (that
+        is how the Spark residual filter interprets them); making that
+        explicit lets ``_stats_encode`` canonicalize them to the UTC the
+        stored bounds use.  Non-datetime values pass through untouched.
+        Spark accepts offset-style timezone ids ('+09:00', 'GMT+8') that
+        ZoneInfo does not — those are parsed as fixed offsets; anything
+        unrecognizable disables skipping for that value (``None`` =>
+        unbounded => every file kept; the residual filter stays correct)."""
         import datetime as _dt
         import re as _re
 
@@ -1052,15 +1077,41 @@ class LakeTable:
                 raise ValueError("pass version OR tag, not both")
             version = self.resolve_tag(tag)
         snap = self.snapshot(version) if version is not None else self.current()
-        if where:
-            where = _conform_where_bounds(snap.schema, where)
-        if where_in:
-            where_in = _conform_where_in(snap.schema, where_in)
-            if any(len(v) == 0 for v in where_in.values()):
-                # a probe list that is empty (or emptied by conformance —
-                # no value representable in the column type) matches
-                # nothing: skip the scan entirely
-                return self.spark.createDataFrame([], snap.schema)
+        plan = self._plan_scan(snap, where, where_in, buckets)
+        if not plan.files:
+            return self.spark.createDataFrame([], snap.schema)
+        df = self._scan(snap.schema, plan.files)
+        residual = plan.residual()
+        return df if residual is None else df.where(residual)
+
+    def _plan_scan(
+        self,
+        snap: Snapshot,
+        where: dict[str, tuple[Any, Any]] | None = None,
+        where_in: dict[str, list] | None = None,
+        buckets: list[int] | None = None,
+    ) -> ScanPlan:
+        """The one scan planner: which buckets and files of ``snap`` the
+        predicates can touch (``read``'s contract for ``where``,
+        ``where_in`` and ``buckets``).  Metadata work over the
+        manifests only, plus one tiny local-relation job when a ``where_in``
+        probe covers the key columns (``_probe_buckets``).
+
+        Predicates are conformed to their column types first; a probe list
+        that is empty (or emptied by conformance — no value representable
+        in the column type) matches nothing, so the plan holds no files
+        and no bucket probe runs.  A naive datetime bound means
+        session-local time to the residual filter, but the stored bounds
+        are UTC — the session tz is attached before encoding, or a non-UTC
+        session would compare wall-clock strings against UTC bounds and
+        silently skip matching files.  Predicates are encoded once here,
+        not once per file."""
+        where = _conform_where_bounds(snap.schema, where) if where else {}
+        where_in = _conform_where_in(snap.schema, where_in) if where_in else {}
+        conv = self._session_tz_converter()
+        aware = {c: (conv(lo), conv(hi)) for c, (lo, hi) in where.items()}
+        if any(len(v) == 0 for v in where_in.values()):
+            return ScanPlan(where, where_in, aware, [], [])
         if where_in and buckets is None:
             buckets = self._probe_buckets(snap, where_in)
         if buckets is not None:
@@ -1068,36 +1119,23 @@ class LakeTable:
             self.check_bucket_fn(snap)
         files = snap.files_for(buckets)
         if where_in:
-            enc_in = _encode_probe_lists(self._session_tz_converter(), where_in)
+            enc_in = _encode_probe_lists(conv, where_in)
             files = [f for f in files if _file_may_match_in(f, enc_in)]
         if where:
-            # A NAIVE datetime bound means session-local time to the
-            # residual filter below, but the stored bounds are UTC — attach
-            # the session tz before encoding, or a non-UTC session would
-            # compare wall-clock strings against UTC bounds and silently
-            # skip matching files.  Encode once here, not per file.
             enc = {
                 c: (_stats_encode(lo), _stats_encode(hi))
-                for c, (lo, hi) in self._session_tz_bounds(where).items()
+                for c, (lo, hi) in aware.items()
             }
             files = [f for f in files if _file_may_match(f, enc)]
-        schema = snap.schema
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f.path) for f in files]
-        # explicit schema => old files yield NULL for late-added columns
-        # (additive evolution), and column pruning/pushdown still apply.
-        df = self.spark.read.schema(schema).parquet(*paths)
-        if where:
-            for col, (lo, hi) in where.items():
-                if lo is not None:
-                    df = df.where(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.where(F.col(col) <= F.lit(hi))
-        if where_in:
-            for col, vals in where_in.items():
-                df = df.where(F.col(col).isin(list(vals)))
-        return df
+        return ScanPlan(where, where_in, aware, buckets, files)
+
+    def _scan(self, schema: T.StructType, files: list[DataFile]) -> DataFrame:
+        """Parquet scan of ``files`` (non-empty) under ``schema``: old
+        files yield NULL for late-added columns (additive evolution), and
+        column pruning/pushdown still apply."""
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, f.path) for f in files]
+        )
 
     _PROBE_BUCKET_MAX_COMBOS = 4096
 
@@ -1178,19 +1216,19 @@ class LakeTable:
         self,
         df: DataFrame,
         commit_id: str,
-        n_buckets: int,
-        key_cols: list[str],
+        snap: Snapshot,
+        n_buckets: int | None = None,
         pre_partitioned: bool = False,
-        target_file_rows: int | None = None,
-        stats_cols: list[str] | None = None,
-        sort_cols: list[str] | None = None,
-        bloom_cols: list[str] | None = None,
         sort_exprs: list | None = None,
+        extra_stats_cols: list[str] | None = None,
     ) -> list[DataFile]:
         """Write ``df`` as one directory tree partitioned by bucket; return the
-        produced files tagged with their bucket.  One output file per bucket
-        by default (a MERGE batch touches a bounded set of buckets, so files
-        stay coarse); with ``target_file_rows`` set (the table property, see
+        produced files tagged with their bucket.  The layout — key columns,
+        bucket count (``n_buckets`` overrides it for a rebucket) and the
+        write properties ``target_file_rows`` / ``stats_cols`` /
+        ``sort_cols`` / ``bloom_cols`` — comes from ``snap``.  One output
+        file per bucket by default (a MERGE batch touches a bounded set of
+        buckets, so files stay coarse); with ``target_file_rows`` set (see
         ``create``) each bucket's output is split at that row count via
         ``maxRecordsPerFile`` — an intra-task split, so the pre-partitioned
         merge path keeps its zero-exchange plan while a hot or freshly
@@ -1208,10 +1246,18 @@ class LakeTable:
         an explicit repartition keeps the snapshot's file count
         O(n_buckets) — skipping it would fan out to n_partitions ×
         n_buckets files (measured 2× end-to-end regression from distributed
-        listing on every read)."""
+        listing on every read).
+
+        ``sort_exprs`` / ``extra_stats_cols``: see ``overwrite_buckets``."""
+        n_buckets = snap.n_buckets if n_buckets is None else n_buckets
+        target_file_rows = self._target_file_rows(snap)
+        stats_cols = list(
+            dict.fromkeys(self._prop_cols(snap, "stats_cols") + list(extra_stats_cols or ()))
+        )
+        sort_cols = self._prop_cols(snap, "sort_cols")
         commit_rel = os.path.join(DATA_DIR, commit_id)
         commit_abs = os.path.join(self.root, commit_rel)
-        out = df.withColumn(BUCKET_COL, bucket_of(key_cols, n_buckets))
+        out = df.withColumn(BUCKET_COL, bucket_of(snap.key_cols, n_buckets))
         if not pre_partitioned:
             out = out.repartition(n_buckets, F.col(BUCKET_COL))
         if sort_exprs is not None:
@@ -1229,7 +1275,7 @@ class LakeTable:
         writer = out.write.mode("overwrite")
         if target_file_rows is not None:
             writer = writer.option("maxRecordsPerFile", int(target_file_rows))
-        for c in bloom_cols or ():
+        for c in self._prop_cols(snap, "bloom_cols"):
             # per-column parquet-mr bloom; NDV bounded by the file row cap
             # when known, so the filter is sized instead of defaulting to
             # the max-bytes cap
@@ -1326,50 +1372,53 @@ class LakeTable:
             return False
         self.check_bucket_fn(snap)
         schema = _merge_schemas(snap.schema, df.schema, self._widening(snap))
-        df = _conform(df, schema)
         commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        new_files = self._write_commit_files(
-            df, commit_id, snap.n_buckets, snap.key_cols,
-            target_file_rows=self._target_file_rows(snap),
-            stats_cols=self._prop_cols(snap, "stats_cols"),
-            sort_cols=self._prop_cols(snap, "sort_cols"),
-            bloom_cols=self._prop_cols(snap, "bloom_cols"),
-        )
-        by_bucket: dict[int, list[DataFile]] = {}
-        for f in new_files:
-            by_bucket.setdefault(f.bucket, []).append(f)
-        for attempt in range(max_rebases + 1):
-            if attempt > 0:
-                snap = self.current()  # rebase on the NEW current
-                if commit_key is not None and snap.has_commit_key(commit_key):
-                    # another writer applied this very key while we raced
-                    return False
-                schema = _merge_schemas(snap.schema, schema, self._widening(snap))
+        new_files = self._write_commit_files(_conform(df, schema), commit_id, snap)
+        return self._commit_append(snap, schema, new_files, commit_id, commit_key, max_rebases)
+
+    def commit_metadata(
+        self, commit_key: str | None = None, schema: T.StructType | None = None
+    ) -> bool:
+        """Metadata-only commit: publish a snapshot that adds no data —
+        it records ``commit_key`` (an idempotency cursor, e.g. the interval
+        a mart refresh covered) and, when ``schema`` is given, additively
+        merges it into the table schema (``append``'s evolution rules;
+        existing files read back NULL-filled).  No Spark job runs.  Returns
+        False if commit_key was already applied; losing the CAS rebases
+        like an append."""
+        snap = self.current()
+        if commit_key is not None and snap.has_commit_key(commit_key):
+            return False
+        schema = snap.schema if schema is None else schema
+        return self._commit_append(snap, schema, [], "", commit_key, 8)
+
+    def _commit_append(
+        self,
+        base: Snapshot,
+        schema: T.StructType,
+        new_files: list[DataFile],
+        commit_id: str,
+        commit_key: str | None,
+        max_rebases: int,
+    ) -> bool:
+        """Publish ``new_files`` added to whatever the current snapshot
+        holds.  Appends are valid against any base, so every rebase is
+        safe: each attempt re-merges ``schema`` onto the snapshot it builds
+        on and rewrites the touched buckets' manifests over that
+        snapshot's files."""
+        by_bucket = _by_bucket(new_files)
+
+        def change(snap: Snapshot, attempt: int) -> dict:
             manifests = dict(snap.manifests)
             for b, nf in by_bucket.items():
                 old = snap.files_for([b]) if b in manifests else []
                 manifests[b] = self._write_manifest(
                     b, old + nf, f"{commit_id}-r{attempt}" if attempt else commit_id
                 )
-            wm, recent = snap.advanced_keys(commit_key)
-            new_snap = Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(schema.jsonValue()),
-                n_buckets=snap.n_buckets,
-                key_cols=snap.key_cols,
-                manifests=manifests,
-                commit_watermarks=wm,
-                recent_commit_keys=recent,
-                properties=snap.properties,
-            )
-            new_snap._root = self.root
-            try:
-                self._publish(new_snap)
-                return True
-            except CommitConflictError:
-                if attempt == max_rebases:
-                    raise
-        raise AssertionError("unreachable")
+            merged = _merge_schemas(snap.schema, schema, self._widening(snap))
+            return {"manifests": manifests, "schema_json": json.dumps(merged.jsonValue())}
+
+        return self._commit(base, commit_key, change, lambda snap: None, max_rebases)
 
     def overwrite_buckets(
         self,
@@ -1434,30 +1483,22 @@ class LakeTable:
         snapshot (e.g. z-order promoting its columns into ``stats_cols``
         so LATER commits keep recording their bounds).  Rides the same
         CAS; keys not listed keep their current values."""
-        snap = (
+        base = (
             self.snapshot(base_version) if base_version is not None else self.current()
         )
         if commit_key is not None and self.current().has_commit_key(commit_key):
             return False
-        self.check_bucket_fn(snap)
+        self.check_bucket_fn(base)
         new_schema = (
             schema
             if schema is not None
-            else _merge_schemas(snap.schema, df.schema, self._widening(snap))
+            else _merge_schemas(base.schema, df.schema, self._widening(base))
         )
-        df = _conform(df, new_schema)
-        commit_id = f"c{snap.version + 1}-{uuid.uuid4().hex[:8]}"
-        stats_cols = self._prop_cols(snap, "stats_cols")
-        if extra_stats_cols:
-            stats_cols = list(dict.fromkeys((stats_cols or []) + list(extra_stats_cols)))
+        commit_id = f"c{base.version + 1}-{uuid.uuid4().hex[:8]}"
         new_files = self._write_commit_files(
-            df, commit_id, snap.n_buckets, snap.key_cols,
-            pre_partitioned=pre_partitioned,
-            target_file_rows=self._target_file_rows(snap),
-            stats_cols=stats_cols,
-            sort_cols=self._prop_cols(snap, "sort_cols"),
-            bloom_cols=self._prop_cols(snap, "bloom_cols"),
-            sort_exprs=sort_exprs,
+            _conform(df, new_schema), commit_id, base,
+            pre_partitioned=pre_partitioned, sort_exprs=sort_exprs,
+            extra_stats_cols=extra_stats_cols,
         )
         bset = set(buckets)
         stray = sorted({f.bucket for f in new_files} - bset)
@@ -1475,58 +1516,108 @@ class LakeTable:
         new_manifests = {
             b: self._write_manifest(b, nf, commit_id) for b, nf in by_bucket.items()
         }
-        base = snap  # the snapshot the surviving rows were derived from
+
+        def change(snap: Snapshot, attempt: int) -> dict:
+            manifests = {b: p for b, p in snap.manifests.items() if b not in bset}
+            manifests.update(new_manifests)
+            return {
+                "manifests": manifests,
+                "schema_json": json.dumps(new_schema.jsonValue()),
+                "properties": {**snap.properties, **(properties_update or {})},
+            }
+
+        def conflict(snap: Snapshot) -> str | None:
+            # every interleaved commit must be irrelevant to the replaced
+            # buckets' derivation
+            if snap.n_buckets != base.n_buckets or snap.properties.get(
+                "bucket_fn"
+            ) != base.properties.get("bucket_fn"):
+                return "bucket layout changed"
+            if snap.schema_json != base.schema_json:
+                return "schema changed"
+            if any(snap.manifests.get(b) != base.manifests.get(b) for b in bset):
+                return "overlapping bucket replaced"
+            return None
+
+        return self._commit(base, commit_key, change, conflict, max_rebases)
+
+    def _rebucket(
+        self, snap: Snapshot, n_buckets: int, commit_key: str | None
+    ) -> list[DataFile] | None:
+        """Rewrite every row of ``snap`` — tombstones included — under
+        ``n_buckets`` and publish it as one snapshot (the mechanics of
+        ``maintenance.rebucket``).  Returns the new files, or None when
+        another writer applied ``commit_key`` first.  Never rebases: the
+        rewrite holds the base's rows, so any interleaved commit raises
+        ``CommitConflictError`` and the caller re-derives."""
+        commit_id = f"c{snap.version + 1}-rb{uuid.uuid4().hex[:8]}"
+        new_files = self._write_commit_files(
+            self.read(version=snap.version), commit_id, snap, n_buckets=n_buckets
+        )
+        manifests = {
+            b: self._write_manifest(b, fs, commit_id)
+            for b, fs in _by_bucket(new_files).items()
+        }
+        ok = self._commit(
+            snap, commit_key,
+            lambda s, attempt: {"n_buckets": n_buckets, "manifests": manifests},
+            lambda s: "the whole table was rewritten from the base",
+            max_rebases=1,  # one re-read: a same-key race reports not-applied
+        )
+        return new_files if ok else None
+
+    def _commit(
+        self,
+        base: Snapshot,
+        commit_key: str | None,
+        change: Callable[[Snapshot, int], dict],
+        conflict: Callable[[Snapshot], str | None],
+        max_rebases: int,
+    ) -> bool:
+        """The one snapshot-commit loop.  Builds the next snapshot on top of
+        ``base`` — ``change(snap, attempt)`` returns the Snapshot fields the
+        commit replaces (manifests, schema, layout, properties) — records
+        ``commit_key`` and CAS-publishes it (``_publish``).
+
+        On losing the CAS the loop re-reads the current snapshot: if another
+        writer applied this very ``commit_key`` meanwhile, the commit is
+        not applied (False); if ``conflict(current)`` names a reason, the
+        commit's data was derived from state that changed under it and
+        ``CommitConflictError`` tells the caller to re-derive; otherwise the
+        commit rebuilds on the new current snapshot and retries — a
+        METADATA-ONLY rebase, no Spark work, no data rewrite — up to
+        ``max_rebases`` times."""
+        snap = base
         for attempt in range(max_rebases + 1):
             if attempt > 0:
                 snap = self.current()
                 if commit_key is not None and snap.has_commit_key(commit_key):
-                    # another writer applied this very key while we raced
                     return False
-                # safe-rebase validation: every interleaved commit must be
-                # irrelevant to the replaced buckets' derivation
-                unsafe = None
-                if snap.n_buckets != base.n_buckets or snap.properties.get(
-                    "bucket_fn"
-                ) != base.properties.get("bucket_fn"):
-                    unsafe = "bucket layout changed"
-                elif snap.schema_json != base.schema_json:
-                    unsafe = "schema changed"
-                elif any(
-                    snap.manifests.get(b) != base.manifests.get(b) for b in bset
-                ):
-                    unsafe = "overlapping bucket replaced"
-                if unsafe:
+                reason = conflict(snap)
+                if reason:
                     raise CommitConflictError(
-                        f"table {self.root}: bucket replacement planned against "
-                        f"version {base.version} cannot rebase onto "
-                        f"{snap.version} ({unsafe}); re-derive from the new "
-                        "current state"
+                        f"table {self.root}: commit planned against version "
+                        f"{base.version} cannot rebase onto {snap.version} "
+                        f"({reason}); re-derive from the new current state"
                     )
-            manifests = {b: p for b, p in snap.manifests.items() if b not in bset}
-            manifests.update(new_manifests)
             wm, recent = snap.advanced_keys(commit_key)
-            new_snap = Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(new_schema.jsonValue()),
-                n_buckets=snap.n_buckets,
-                key_cols=snap.key_cols,
-                manifests=manifests,
-                commit_watermarks=wm,
-                recent_commit_keys=recent,
-                properties=(
-                    {**snap.properties, **properties_update}
-                    if properties_update
-                    else snap.properties
-                ),
-            )
-            new_snap._root = self.root
             try:
-                self._publish(new_snap)
+                self._publish(replace(
+                    snap, version=snap.version + 1, commit_watermarks=wm,
+                    recent_commit_keys=recent, **change(snap, attempt),
+                ))
                 return True
             except CommitConflictError:
                 if attempt == max_rebases:
                     raise
         raise AssertionError("unreachable")
+
+
+def _by_bucket(files: list[DataFile]) -> dict[int, list[DataFile]]:
+    out: dict[int, list[DataFile]] = {}
+    for f in files:
+        out.setdefault(f.bucket, []).append(f)
+    return out
 
 
 def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:

@@ -363,7 +363,7 @@ def _local_input_bytes(df: DataFrame) -> int:
 # (A/B: md5 dedup at 0.6 MB is 0.25 s unwidened vs 0.42 s widened — the
 # exchange dominates; at 6 MB it is 1.06 s vs 0.5 s — the serial scan
 # dominates).  Heavy kernels (minhash/embedding) widen unconditionally.
-_WIDEN_MIN_BYTES = int(__import__("os").environ.get("SPARK_GRAFT_WIDEN_MIN_BYTES", 4 << 20))
+_WIDEN_MIN_BYTES = 4 << 20
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
